@@ -33,10 +33,11 @@ from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 import zlib
 from typing import Any, BinaryIO
+
+from iceberg_metadata_pipeline_spark.catalog import atomic
 
 MAGIC = b"Obj\x01"
 
@@ -301,10 +302,7 @@ def frame_container(
         write_long(out, count)
         write_bytes(out, payload)
         out.write(sync)
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as fh:
-        fh.write(out.getvalue())
-    os.replace(tmp, path)
+    atomic.replace(path, out.getvalue())
 
 
 def read_container(

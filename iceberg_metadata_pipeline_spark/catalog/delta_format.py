@@ -55,6 +55,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from iceberg_metadata_pipeline_spark.catalog import atomic
+
 _LOG_DIR = "_delta_log"
 _SUPPORTED_READER_FEATURES = {
     # features whose on-disk effect this reader actually handles
@@ -79,12 +81,14 @@ def _commit_path(location: str, v: int) -> str:
 
 def write_commit(location: str, actions: list[dict], version: int | None = None) -> int:
     """Append one commit (newline-delimited JSON actions) as the next —
-    or the given — log version. Atomic via write-temp + rename; refuses
-    to overwrite an existing version (Delta's optimistic-concurrency
-    put-if-absent contract). Tables configured ``delta.appendOnly=true``
-    refuse any remove with ``dataChange`` (deletes/overwrites) at this
-    choke point — layout-only removes (OPTIMIZE's dataChange=false)
-    stay legal, matching the protocol's enforcement rule."""
+    or the given — log version. Published with ``atomic.put_if_absent``,
+    Delta's optimistic-concurrency contract: of two writers racing for
+    one version exactly one wins, the other gets FileExistsError and
+    the winner's log entry is never overwritten. Tables configured
+    ``delta.appendOnly=true`` refuse any remove with ``dataChange``
+    (deletes/overwrites) at this choke point — layout-only removes
+    (OPTIMIZE's dataChange=false) stay legal, matching the protocol's
+    enforcement rule."""
     log_dir = os.path.join(location, _LOG_DIR)
     os.makedirs(log_dir, exist_ok=True)
     if version is None:
@@ -105,16 +109,12 @@ def write_commit(location: str, actions: list[dict], version: int | None = None)
                 "(OPTIMIZE) is still allowed"
             )
     dest = _commit_path(location, version)
-    if os.path.exists(dest):
+    payload = "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
+    if not atomic.put_if_absent(dest, payload.encode()):
         raise FileExistsError(
             f"delta log version {version} already exists at {dest} "
             "(concurrent writer? retry against the new latest version)"
         )
-    tmp = dest + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a, separators=(",", ":")) + "\n")
-    os.replace(tmp, dest)
     return version
 
 

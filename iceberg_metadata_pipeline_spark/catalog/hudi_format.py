@@ -82,6 +82,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from iceberg_metadata_pipeline_spark.catalog import atomic
+
 _HOODIE = ".hoodie"
 _COMPLETED_ACTIONS = ("commit", "replacecommit", "clean", "rollback", "savepoint")
 _WRITE_TOKEN = "0-1-0"  # taskPartitionId-stageId-attempt; single-writer export
@@ -113,12 +115,9 @@ def write_properties(location: str, props: dict[str, str]) -> str:
     hoodie = os.path.join(location, _HOODIE)
     os.makedirs(hoodie, exist_ok=True)
     dest = os.path.join(hoodie, "hoodie.properties")
-    tmp = dest + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        fh.write("#Updated at " + time.strftime("%a %b %d %H:%M:%S UTC %Y", time.gmtime()) + "\n")
-        for k in sorted(props):
-            fh.write(f"{k}={props[k]}\n")
-    os.replace(tmp, dest)
+    lines = ["#Updated at " + time.strftime("%a %b %d %H:%M:%S UTC %Y", time.gmtime())]
+    lines += [f"{k}={props[k]}" for k in sorted(props)]
+    atomic.replace(dest, ("\n".join(lines) + "\n").encode())
     return dest
 
 
@@ -196,18 +195,17 @@ def completed_instants(
 
 
 def _write_instant_file(location: str, name: str, payload: bytes) -> str:
+    """Publish one timeline file with ``atomic.put_if_absent``: the
+    timeline is put-if-absent, so of two writers racing for one instant
+    file exactly one wins and the other gets FileExistsError."""
     hoodie = os.path.join(location, _HOODIE)
     os.makedirs(hoodie, exist_ok=True)
     dest = os.path.join(hoodie, name)
-    if os.path.exists(dest):
+    if not atomic.put_if_absent(dest, payload):
         raise FileExistsError(
             f"hudi instant {name} already exists (concurrent writer? "
             "the timeline is put-if-absent)"
         )
-    tmp = dest + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "wb") as fh:
-        fh.write(payload)
-    os.replace(tmp, dest)
     return dest
 
 
@@ -497,17 +495,12 @@ def _ensure_partition_metadata(location: str, partition_path: str, instant: str)
     if os.path.exists(marker):
         return
     depth = len([p for p in partition_path.split("/") if p])
-    # tmp + atomic rename: concurrent tasks of a distributed write may
-    # race on the same partition's marker; both write identical content,
-    # rename makes the winner whole
-    import uuid as _uuid
-
-    tmp = f"{marker}._tmp-{_uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        fh.write("#partition metadata\n")
-        fh.write(f"commitTime={instant}\n")
-        fh.write(f"partitionDepth={depth}\n")
-    os.replace(tmp, marker)
+    # concurrent tasks of a distributed write may race on the same
+    # partition's marker; both write identical content, so replace
+    atomic.replace(
+        marker,
+        f"#partition metadata\ncommitTime={instant}\npartitionDepth={depth}\n".encode(),
+    )
 
 
 # ---------------------------------------------------------------------------

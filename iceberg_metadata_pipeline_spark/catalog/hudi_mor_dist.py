@@ -24,12 +24,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import uuid
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from iceberg_metadata_pipeline_spark.catalog import atomic
 
 _STATS_SCHEMA = "ppath string, stat string"
 
@@ -228,9 +229,7 @@ def _atomic_write_parquet(table, dest: str) -> int:
     instead of interleaving appends. Returns the file size."""
     import pyarrow.parquet as pq
 
-    tmp = f"{dest}._tmp-{uuid.uuid4().hex}"
-    pq.write_table(table, tmp)
-    os.replace(tmp, dest)
+    atomic.replace(dest, lambda tmp: pq.write_table(table, tmp))
     return os.path.getsize(dest)
 
 
@@ -239,9 +238,9 @@ def _atomic_write_log(dest: str, block_type: int, headers: dict, content: bytes)
         append_log_block,
     )
 
-    tmp = f"{dest}._tmp-{uuid.uuid4().hex}"
-    append_log_block(tmp, block_type, headers, content)
-    os.replace(tmp, dest)
+    atomic.replace(
+        dest, lambda tmp: append_log_block(tmp, block_type, headers, content)
+    )
     return os.path.getsize(dest)
 
 

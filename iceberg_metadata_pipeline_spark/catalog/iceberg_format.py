@@ -64,7 +64,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from iceberg_metadata_pipeline_spark.catalog import avro_io
+from iceberg_metadata_pipeline_spark.catalog import atomic, avro_io
 from iceberg_metadata_pipeline_spark.catalog.metacat import (
     Catalog,
     DataFileEntry,
@@ -899,30 +899,13 @@ def export_iceberg_table(table: Table, dest: str, format_version: int = 2) -> st
             else {}
         ),
     }
-    # HadoopTableOperations naming: v<N>.metadata.json + version-hint.text
-    existing = glob.glob(os.path.join(meta_dir, "v*.metadata.json"))
-    next_v = 1 + max(
-        (
-            int(m.group(1))
-            for p in existing
-            if (m := re.fullmatch(r"v(\d+)\.metadata\.json", os.path.basename(p)))
-        ),
-        default=0,
+    prev_path = os.path.join(
+        meta_dir, f"v{_next_metadata_version(dest) - 1}.metadata.json"
     )
-    if existing and snapshot_id is not None:
+    if snapshot_id is not None and os.path.exists(prev_path):
         # carry forward puffin statistics still valid for this snapshot
         # (attach_ndv_statistics wrote them into a PREVIOUS vN; a fresh
         # export must not silently drop table stats the CBO relies on)
-        prev_path = max(
-            existing,
-            key=lambda p: int(
-                re.fullmatch(
-                    r"v(\d+)\.metadata\.json", os.path.basename(p)
-                ).group(1)
-            )
-            if re.fullmatch(r"v(\d+)\.metadata\.json", os.path.basename(p))
-            else -1,
-        )
         try:
             with open(prev_path) as fh:
                 prev_md = json.load(fh)
@@ -936,17 +919,7 @@ def export_iceberg_table(table: Table, dest: str, format_version: int = 2) -> st
                 metadata["statistics"] = kept
         except (OSError, json.JSONDecodeError):
             pass  # unreadable previous metadata: export fresh without stats
-    meta_path = os.path.join(meta_dir, f"v{next_v}.metadata.json")
-    with open(meta_path + ".tmp", "w") as fh:
-        json.dump(metadata, fh, indent=2)
-    os.replace(meta_path + ".tmp", meta_path)
-    with open(os.path.join(meta_dir, "version-hint.text.tmp"), "w") as fh:
-        fh.write(str(next_v))
-    os.replace(
-        os.path.join(meta_dir, "version-hint.text.tmp"),
-        os.path.join(meta_dir, "version-hint.text"),
-    )
-    return meta_path
+    return _write_metadata_version(dest, metadata)
 
 
 def _next_metadata_version(location: str) -> int:
@@ -964,36 +937,16 @@ def _next_metadata_version(location: str) -> int:
 def _claim_metadata_version(
     location: str, metadata: dict, version: int
 ) -> str | None:
-    """ATOMICALLY claim v<version>.metadata.json — ``os.link`` fails
-    with FileExistsError if another writer got there first, which is
-    exactly HadoopTableOperations' rename-without-replace commit claim.
-    Returns the path, or None on conflict (caller rebuilds + retries)."""
+    """ATOMICALLY claim v<version>.metadata.json through
+    ``atomic.put_if_absent`` — HadoopTableOperations' rename-without-
+    replace commit claim — then advance the version hint. Returns the
+    path, or None on conflict (caller rebuilds + retries)."""
     meta_dir = os.path.join(location, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
     meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=2)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        os.unlink(tmp)
+    if not atomic.put_if_absent(meta_path, json.dumps(metadata, indent=2).encode()):
         return None
-    os.unlink(tmp)
-    # the hint is best-effort and must only ADVANCE: a slower claimant
-    # overwriting a newer hint would point readers (and a committer's
-    # retry) at a stale-but-existing version
-    hint = os.path.join(meta_dir, "version-hint.text")
-    try:
-        with open(hint) as fh:
-            cur = int(fh.read().strip())
-    except (OSError, ValueError):
-        cur = -1
-    if version > cur:
-        tmp_h = f"{hint}.tmp-{version}"
-        with open(tmp_h, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp_h, hint)
+    atomic.advance_hint(os.path.join(meta_dir, "version-hint.text"), version)
     return meta_path
 
 
@@ -1791,10 +1744,10 @@ def commit_iceberg_append(
     from the table's ``next-row-id``. Returns the new metadata path.
 
     CONCURRENT writers (round 9): the new metadata version is claimed
-    ATOMICALLY (os.link fails if another commit took the slot); on
-    conflict the whole commit REBUILDS against the new latest metadata
-    and retries — optimistic concurrency, appends never lose each
-    other. Orphaned manifests from lost races are unreferenced and
+    ATOMICALLY (``atomic.put_if_absent`` fails if another commit took
+    the slot); on conflict the whole commit REBUILDS against the new
+    latest metadata and retries — optimistic concurrency, appends never
+    lose each other. Orphaned manifests from lost races are unreferenced and
     reclaimed by expire."""
     for _attempt in range(8):
         p = _try_commit_iceberg_append(
@@ -2788,7 +2741,9 @@ def export_iceberg_view(catalog, namespace: str, name: str, dest: str) -> str:
     md["version-log"].append({"timestamp-ms": now_ms, "version-id": version_id})
     md["current-version-id"] = version_id
     meta_path = os.path.join(meta_dir, f"v{next_v}.metadata.json")
-    with open(meta_path + ".tmp", "w") as fh:
-        json.dump(md, fh, indent=2)
-    os.replace(meta_path + ".tmp", meta_path)
+    if not atomic.put_if_absent(meta_path, json.dumps(md, indent=2).encode()):
+        raise FileExistsError(
+            f"view metadata v{next_v} already exists at {meta_path} "
+            "(concurrent writer? re-export against the new latest version)"
+        )
     return meta_path

@@ -3,13 +3,11 @@
 The reference monkey-patches PyHive so Superset can introspect the Spark
 catalog (`SHOW TABLES IN`, `SHOW VIEWS IN`, `SHOW CREATE TABLE` for both
 tables and views — Spark has no SHOW CREATE VIEW, which superset_config.py:19-41
-rewrites away). Here the same surface is exposed twice: over our warehouse
-catalog and over the live Spark session catalog.
+rewrites away). Here the same surface is exposed over our warehouse
+catalog; the live Spark session catalog answers the same SQL directly.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_metadata_pipeline_spark.catalog.metacat import Catalog
 
@@ -17,17 +15,6 @@ from iceberg_metadata_pipeline_spark.catalog.metacat import Catalog
 def list_tables(catalog: Catalog, namespace: str) -> list[str]:
     """A13: table names in a namespace."""
     return catalog.list_tables(namespace)
-
-
-def spark_list_tables(spark: SparkSession, pattern: str | None = None) -> DataFrame:
-    """A13 over the session catalog (`SHOW TABLES` → tableName column)."""
-    q = "SHOW TABLES" + (f" LIKE '{pattern}'" if pattern else "")
-    return spark.sql(q)
-
-
-def spark_list_views(spark: SparkSession) -> DataFrame:
-    """A14: `SHOW VIEWS` (temp views included)."""
-    return spark.sql("SHOW VIEWS")
 
 
 def show_create_table(catalog: Catalog, namespace: str, name: str) -> str:
@@ -48,8 +35,3 @@ def show_create_table(catalog: Catalog, namespace: str, name: str) -> str:
     return ddl
 
 
-def spark_show_create_table(spark: SparkSession, qualified_name: str) -> str:
-    """A15 over the session catalog; multi-row results joined like
-    pyhive_spark_patch.py:30-34."""
-    rows = spark.sql(f"SHOW CREATE TABLE {qualified_name}").collect()
-    return "\n".join(r[0] for r in rows)

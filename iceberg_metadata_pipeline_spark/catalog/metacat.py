@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from iceberg_metadata_pipeline_spark.catalog import atomic
+
 
 @dataclass
 class DataFileEntry:
@@ -3528,10 +3530,7 @@ def _write_manifest_delta(
         "added_deletes": added_deletes or [],
         "clears_deletes": clears_deletes,
     }
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh, indent=1)
-    os.replace(tmp, path)
+    atomic.replace(path, json.dumps(doc, indent=1).encode())
 
 
 def _write_metadata(location: str, meta: dict, version: int) -> None:
@@ -3539,25 +3538,18 @@ def _write_metadata(location: str, meta: dict, version: int) -> None:
     HadoopTableOperations commit protocol). ``version`` is the version the
     writer is TRYING to claim — base-version-it-read + 1, never re-derived
     from disk (a stale writer must collide, not silently win). The file is
-    created with O_EXCL — exclusive create is the compare-and-swap: of two
-    racing writers exactly one owns v(N+1), the other gets
-    CommitConflictError and must refresh + reapply."""
+    serialized whole, then claimed with ``atomic.put_if_absent`` — the
+    compare-and-swap: of two racing writers exactly one owns v(N+1), the
+    other gets CommitConflictError and must refresh + reapply. A writer
+    that fails or dies before the claim leaves v(N+1) free."""
     meta_dir = os.path.join(location, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
-    hint_path = os.path.join(meta_dir, "version-hint.text")
     target = os.path.join(meta_dir, f"v{version}.metadata.json")
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
+    if not atomic.put_if_absent(target, json.dumps(meta, indent=1).encode()):
         raise CommitConflictError(
             f"metadata version v{version} already committed by another writer"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh, indent=1)
-    tmp_hint = hint_path + ".tmp"
-    with open(tmp_hint, "w") as fh:
-        fh.write(str(version))
-    os.rename(tmp_hint, hint_path)
+        )
+    atomic.advance_hint(os.path.join(meta_dir, "version-hint.text"), version)
 
 
 def _footer_entry(path: str) -> DataFileEntry:

@@ -33,6 +33,8 @@ import json
 import os
 import struct
 
+from iceberg_metadata_pipeline_spark.catalog import atomic
+
 MAGIC = b"PFA1"
 
 
@@ -209,9 +211,7 @@ def attach_ndv_statistics(
     ]
     stats.append(entry)
     md["statistics"] = stats
-    with open(meta_path + ".tmp", "w") as fh:
-        json.dump(md, fh, indent=2)
-    os.replace(meta_path + ".tmp", meta_path)
+    atomic.replace(meta_path, json.dumps(md, indent=2).encode())
     return stats_path
 
 

@@ -45,16 +45,6 @@ def spark_to_arrow_schema(schema):
     return to_arrow_schema(schema)
 
 
-def sorted_positions(dead) -> "object | None":
-    """A set/iterable of dead file positions → sorted int64 numpy array
-    (None when empty) for O(log n) per-batch range lookups."""
-    import numpy as np
-
-    if not dead:
-        return None
-    return np.asarray(sorted(dead), dtype=np.int64)
-
-
 def position_mask(start: int, n: int, dead_np):
     """Boolean KEEP mask for file rows [start, start+n) against the
     sorted dead-position array; None when no dead row falls in range

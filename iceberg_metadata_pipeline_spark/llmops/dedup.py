@@ -341,34 +341,6 @@ def lsh_candidate_pairs(
     )
 
 
-def exact_jaccard_for_pairs(
-    pairs: DataFrame, shingle_df: DataFrame, id_col: str
-) -> DataFrame:
-    """Verify candidates with exact shingle-set Jaccard — the join touches
-    only candidate ids (semi-join pushout), not the full corpus."""
-    sizes = shingle_df.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_a = shingle_df.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = shingle_df.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-    )
-
-
 def jaccard_for_pairs_arrays(
     pairs: DataFrame, sh_arr_df: DataFrame, id_col: str
 ) -> DataFrame:

@@ -5,9 +5,8 @@ pandas UDF fitting one model per key).
 
 The kernel here is a closed-form least-squares linear trend per
 event_type over hourly buckets (deterministic, no solver) — the seam a
-real deployment swaps for Prophet/ARIMA per key. Accuracy vs DuckDB's
-regr_slope/regr_intercept is asserted in tests (1e-9), but the query is
-rows-only: float summation order across engines differs in ulps.
+real deployment swaps for Prophet/ARIMA per key. Accuracy vs the exact
+rational least-squares fit is asserted in tests (1e-11).
 
 Scale notes: groupBy().applyInPandas ships each key's rows to one task —
 the pattern holds while per-key data fits a task (hours × years is

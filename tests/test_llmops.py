@@ -387,9 +387,11 @@ def test_pq_encode_shape_and_determinism(spark, tables):
 
 
 def test_trend_fit_matches_duckdb_regression(spark, sf_dir):
-    # the applyInPandas closed-form fit must agree with DuckDB's
-    # regr_slope/regr_intercept on the same hourly series to 1e-9
-    import duckdb
+    # the applyInPandas closed-form fit must agree with the EXACT rational
+    # least-squares fit of the same hourly series to 1e-11. (DuckDB's float
+    # regr_intercept was the oracle once; its error reaches 1.7e-9 and
+    # moves with row order, so it cannot referee a fit this precise.)
+    from fractions import Fraction
 
     from iceberg_metadata_pipeline_spark.llmops.forecast import (
         fit_linear_trend_per_group,
@@ -404,15 +406,16 @@ def test_trend_fit_matches_duckdb_regression(spark, sf_dir):
         for r in fit_linear_trend_per_group(hourly).collect()
     }
     pdf = hourly.toPandas()
-    con = duckdb.connect()
-    con.register("hourly", pdf)
-    want = con.execute(
-        "SELECT event_type, regr_slope(y, bucket_idx) s, regr_intercept(y, bucket_idx) i "
-        "FROM hourly GROUP BY event_type"
-    ).fetchall()
-    for et, s, i in want:
+    assert set(got) == set(pdf["event_type"])
+    for et, g in pdf.groupby("event_type"):
+        xs = [int(x) for x in g["bucket_idx"]]
+        ys = [Fraction(int(y), 10**6) for y in g["y_micro"]]
+        n, sx, sy = len(xs), sum(xs), sum(ys)
+        den = n * sum(x * x for x in xs) - sx * sx
+        s = (n * sum(x * y for x, y in zip(xs, ys)) - sx * sy) / den if den else 0
+        i = (sy - s * sx) / n
         gs, gi = got[et]
-        assert abs(gs - s) < 1e-9 and abs(gi - i) < 1e-9, et
+        assert abs(gs - float(s)) <= 1e-11 and abs(gi - float(i)) <= 1e-11, et
 
 
 def test_connected_components_transitive_closure(spark):
